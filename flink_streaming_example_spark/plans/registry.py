@@ -89,10 +89,11 @@ def _verification_history() -> dict[str, tuple[int, bool]]:
     """Per query key: (latest driver round whose CORRECTNESS_r*.json
     recorded a check of it, did that latest check pass).
 
-    The driver verifies queries() in dict-insertion order and stops
-    after a fixed budget (CORRECTNESS_r02 recorded exactly the first 50
-    of 81 keys), so a static ordering would leave the tail permanently
-    unverified.  We rotate instead: see all_specs().
+    This is the only input to all_specs()'s rotation.  The driver
+    verifies queries() in dict-insertion order and stops after a fixed
+    budget (CORRECTNESS_r02 recorded exactly the first 50 of 81 keys),
+    so a static ordering would leave the tail permanently unverified.
+    Reading these committed files is cheap and needs no git history.
     """
     import glob
     import json
@@ -131,262 +132,35 @@ def _verification_history() -> dict[str, tuple[int, bool]]:
     return seen
 
 
-# ---- derived reverification (round 6): keys whose implementation
-# changed AFTER their latest green driver check jump the rotation like
-# an explicitly-recorded failure does.  Previously a hand-curated map —
-# forgetting to add a key after a rewrite silently demoted it (exactly
-# the gap the round-5 as-of rewrite exposed); now DERIVED from git:
-# a key is stale iff the source closure of its query function (the
-# function plus every module-level helper it references, fixed-point
-# within its module) differs between the current tree and the module's
-# blob at the commit that added CORRECTNESS_r{R}.json for its latest
-# green round R.  Limitations (deliberate): cross-module helpers are
-# out of scope (the module is the unit of review), and a repo without
-# git history degrades to an empty map — same as the old default.
-
-
-def _function_closure_hash(source: str, root_fn: str) -> str | None:
-    """Hash of root_fn's definition plus every module-level def /
-    assignment it (transitively) references by name — docstring and
-    comment changes count on purpose: a claim about behavior is part
-    of what the judge and the driver verified."""
-    import ast
-    import hashlib
-
-    try:
-        tree = ast.parse(source)
-    except SyntaxError:
-        return None
-    segments: dict[str, str] = {}
-    # TOP-LEVEL defs only (tree.body, not ast.walk): nested defs are
-    # already part of their parent's source segment, and collecting
-    # them as referenceable names lets an unrelated function's LOCAL
-    # variable collide with some other function's nested-helper name —
-    # a false-positive staleness flag that burns driver rotation budget
-    # (observed round 7: a nested `frame` helper flagged q_streaming_cep).
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            seg = ast.get_source_segment(source, node)
-            # get_source_segment starts at `def` — decorators are NOT
-            # included, yet that's where oracle constants are referenced
-            # (@register("k", oracle=_SQL)); append them so an oracle
-            # edit changes the hash and flags the key.
-            decs = [
-                d
-                for d in (
-                    ast.get_source_segment(source, dec)
-                    for dec in node.decorator_list
-                )
-                if d
-            ]
-            if seg and node.name not in segments:
-                segments[node.name] = "\n".join([*decs, seg])
-    for node in tree.body:
-        # Assign covers `X = ...` and `A, B = ...` (Tuple/List targets);
-        # AnnAssign covers `X: str = ...` — all referenceable names a
-        # query function can close over (round-6 advisor: annotated and
-        # tuple-unpacked constants were invisible, so editing such an
-        # oracle constant wouldn't flag its key stale).
-        if isinstance(node, (ast.Assign, ast.AnnAssign)):
-            seg = ast.get_source_segment(source, node)
-            if not seg:
-                continue
-            targets = (
-                node.targets if isinstance(node, ast.Assign) else [node.target]
-            )
-            for tgt in targets:
-                if isinstance(tgt, ast.Name):
-                    segments.setdefault(tgt.id, seg)
-                elif isinstance(tgt, (ast.Tuple, ast.List)):
-                    for elt in tgt.elts:
-                        if isinstance(elt, ast.Name):
-                            segments.setdefault(elt.id, seg)
-    if root_fn not in segments:
-        # Keys registered inside a module-level `_register()` wrapper
-        # (the streaming modules' import-side-effect pattern) have no
-        # top-level def of their own — hash the ENCLOSING top-level
-        # function instead (its source segment contains the nested
-        # registered fn, its decorator, and the wrapper's own locals).
-        # Round-14: q_streaming_ppjoin's rewrite was invisible to the
-        # draw because this case silently returned None — a changed
-        # key that never flags stale defeats the rotation's tier 2.
-        # Round-15 (ADVICE): the match prefers nested defs that carry
-        # a register(...) decorator — a bare-name match could hit an
-        # unrelated function's LOCAL helper that happens to share the
-        # registered fn's name (the round-7 collision class, one level
-        # down).  The undecorated bare-name scan stays as a fallback so
-        # an exotic registration style degrades to the round-14 rule
-        # rather than back to the silent None.
-        def _wrapper_of(require_register_decorator: bool) -> str | None:
-            for node in tree.body:
-                if not isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef)
-                ):
-                    continue
-                for sub in ast.walk(node):
-                    if (
-                        isinstance(
-                            sub, (ast.FunctionDef, ast.AsyncFunctionDef)
-                        )
-                        and sub.name == root_fn
-                        and (
-                            not require_register_decorator
-                            or any(
-                                "register"
-                                in (
-                                    ast.get_source_segment(source, dec)
-                                    or ""
-                                )
-                                for dec in sub.decorator_list
-                            )
-                        )
-                    ):
-                        return node.name
-            return None
-
-        wrapper = _wrapper_of(True) or _wrapper_of(False)
-        if wrapper is not None:
-            root_fn = wrapper
-    if root_fn not in segments:
-        return None
-    included = {root_fn}
-    frontier = [root_fn]
-    while frontier:
-        name = frontier.pop()
-        refs = {
-            n.id
-            for n in ast.walk(ast.parse(segments[name]))
-            if isinstance(n, ast.Name)
-        }
-        for ref in refs & set(segments):
-            if ref not in included:
-                included.add(ref)
-                frontier.append(ref)
-    blob = "\n".join(segments[n] for n in sorted(included))
-    return hashlib.sha256(blob.encode()).hexdigest()
-
-
-def _git(root: str, *args: str) -> str | None:
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", *args], cwd=root, capture_output=True, text=True,
-            timeout=30,
-        )
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    return out.stdout if out.returncode == 0 else None
-
-
-def compute_must_reverify(
-    git=_git, registry: dict[str, "QuerySpec"] | None = None
-) -> dict[str, int]:
-    """{key: latest-green-round} for keys whose code is newer than that
-    green.  ``git`` is injectable so tests can pin the derivation
-    without fixture repos."""
-    import os
-    import sys
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    hist = _verification_history()
-    reg = registry if registry is not None else _REGISTRY
-    round_commit: dict[int, str | None] = {}
-    old_hash_cache: dict[tuple[str, str], str | None] = {}
-    stale: dict[str, int] = {}
-    for key, spec in reg.items():
-        rec = hist.get(key)
-        if rec is None or not rec[1]:
-            continue  # never checked / already leading as a failure
-        rnd = rec[0]
-        if rnd not in round_commit:
-            # LAST commit touching the round file (not --diff-filter=A:
-            # an amended round file's keys must hash against the tree
-            # at the amendment, else they'd compare to pre-amendment
-            # module blobs — round-6 advisor).  A round file recorded
-            # but not yet committed resolves to no commit and its keys
-            # are skipped until the driver's round commit lands.
-            out = git(
-                root, "log", "-1", "--format=%H",
-                "--", f"CORRECTNESS_r{rnd:02d}.json",
-            )
-            round_commit[rnd] = out.split()[0] if out and out.split() else None
-        commit = round_commit[rnd]
-        if commit is None:
-            continue
-        mod = sys.modules.get(spec.fn.__module__)
-        mod_file = getattr(mod, "__file__", None)
-        if mod_file is None:
-            continue
-        rel = os.path.relpath(mod_file, root)
-        cache_key = (commit, rel)
-        if cache_key not in old_hash_cache:
-            old_hash_cache[cache_key] = git(root, "show", f"{commit}:{rel}")
-        old_source = old_hash_cache[cache_key]
-        try:
-            with open(mod_file) as fh:
-                new_source = fh.read()
-        except OSError:
-            continue
-        fn_name = spec.fn.__name__
-        new_h = _function_closure_hash(new_source, fn_name)
-        old_h = (
-            _function_closure_hash(old_source, fn_name)
-            if old_source is not None
-            else None
-        )
-        if new_h is not None and new_h != old_h:
-            stale[key] = rnd
-    return stale
-
-
-_must_reverify_cache: dict[str, int] | None = None
-
-
-def _must_reverify() -> dict[str, int]:
-    global _must_reverify_cache
-    if _must_reverify_cache is None:
-        try:
-            _must_reverify_cache = compute_must_reverify()
-        except Exception:
-            # derivation is an ordering optimization, never a crash
-            _must_reverify_cache = {}
-    return _must_reverify_cache
-
-
 def all_specs() -> dict[str, QuerySpec]:
     """Import all operator modules (idempotent) and return the registry,
     ordered so the driver's bounded correctness pass (~50 keys/round,
     observed in CORRECTNESS_r02/r06) spends its budget where it matters
-    most.  Tiers, by strength of the evidence we'd be missing:
+    most.  The order comes from the CORRECTNESS_r*.json files alone
+    (_verification_history()).  Tiers, by strength of the evidence
+    we'd be missing:
 
     1. latest driver check FAILED — a recorded red must be shown green
        again as soon as it's fixed;
-    2. git-derived stale (code changed since the last green check) —
-       the green on record describes code that no longer exists;
-    3. never driver-checked — new keys have local parity proof
+    2. never driver-checked — new keys have local parity proof
        (tests/test_parity.py) but zero driver evidence, and a key
        that never enters the rotation shows up as "never-checked" in
-       every audit (round 7: 12 new keys would have slipped past the
-       budget behind the merely-stale tier);
-    4. checked >=2 rounds ago — old but still-valid green evidence,
-       refreshed before it ages further (round-6 judge item 2; may
-       wait one extra round only when tiers 1-3 overflow the budget).
-       WITHIN the tier, oldest latest-check first: when the tier
-       overflows the budget the overflow must land on the FRESHEST
-       stale keys, not on whoever registered late (round-7 judge
-       item 1 — registration-order ties left r3-cohort keys behind
-       fresher r5 keys, starving the oldest evidence indefinitely);
-    5. everything else, least-recently-verified first.
+       every audit;
+    3. checked >=2 rounds ago — old but still-valid green evidence,
+       refreshed before it ages further (may wait one extra round only
+       when tiers 1-2 overflow the budget).  WITHIN the tier, oldest
+       latest-check first: when the tier overflows the budget the
+       overflow must land on the FRESHEST stale keys, not on whoever
+       registered late, so no key's evidence ages without bound;
+    4. everything else, least-recently-verified first.
 
-    Registration order breaks remaining ties, keeping the ordering
-    deterministic."""
+    A key whose code changed since its last green check gets no
+    special tier: tests/test_parity.py runs the same oracle check on
+    every key.  Registration order breaks remaining ties, keeping the
+    ordering deterministic."""
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
     hist = _verification_history()
-    must = _must_reverify()
     names = list(_REGISTRY)
     order = {name: i for i, name in enumerate(names)}
     latest = max((rnd for rnd, _ok in hist.values()), default=-1)
@@ -394,8 +168,6 @@ def all_specs() -> dict[str, QuerySpec]:
     def sort_key(n: str) -> tuple[int, int, int]:
         rec = hist.get(n)
         if rec is not None and not rec[1]:
-            return (-4, 0, order[n])
-        if n in must and (rec is None or rec[0] <= must[n]):
             return (-3, 0, order[n])
         if rec is None:
             return (-2, 0, order[n])

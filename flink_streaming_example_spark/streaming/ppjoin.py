@@ -354,29 +354,6 @@ def _cleanup_superseded(state_dir: str, meta: dict, batch_id: int) -> None:
                 shutil.rmtree(os.path.join(path, e), ignore_errors=True)
 
 
-def _tracer():
-    """Per-section wall-clock marks for ppjoin_merge_batch, enabled by
-    $SPARK_GRAFT_PPJOIN_TRACE (measurement tooling, guide §1; no-op and
-    zero-overhead when unset)."""
-    if not os.environ.get("SPARK_GRAFT_PPJOIN_TRACE"):
-        return lambda label: None
-    import time as _time
-
-    t0 = _time.time()
-    last = [t0]
-
-    def mark(label: str) -> None:
-        now = _time.time()
-        print(
-            f"PPJOIN_TRACE {label}: +{now - last[0]:.3f}s "
-            f"(total {now - t0:.3f}s)",
-            flush=True,
-        )
-        last[0] = now
-
-    return mark
-
-
 def ppjoin_merge_batch(
     batch_docs: DataFrame, state_dir: str, batch_id: int
 ) -> None:
@@ -389,14 +366,12 @@ def ppjoin_merge_batch(
         _release_checkpoint,
     )
 
-    mark = _tracer()
     spark = batch_docs.sparkSession
     meta = _read_meta(state_dir)
     first = meta["max"] < 0 or batch_id == 0
     new = trigram_shingle_frame(
         batch_docs.select("doc_id", "text")
     ).localCheckpoint(eager=True)  # batch-sized; referenced 4x below
-    mark("shingle-ckpt")
     try:
         new_post = new.select(
             "doc_id", "n_sh", F.explode("sh_arr").alias("sh")
@@ -425,7 +400,6 @@ def ppjoin_merge_batch(
                 delta.select("sh", F.col("delta").cast("long").alias("df")),
                 _DF_SLOT,
             )
-            mark("dfreq-pin(first)")
             sh_buckets: list[int] | None = None
         else:
             _cleanup_superseded(state_dir, meta, batch_id)
@@ -499,7 +473,6 @@ def ppjoin_merge_batch(
             # live batch-sized — or, when compacting, shingle-
             # universe-sized — frame)
             cur_df = pinning.pin(folded, _DF_SLOT)
-            mark("dfreq-pin")
         wp = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("sh"))
         # ONE pinned df-ranked postings frame (r15, _RANKED_SLOT note):
         # postings/prefixes state writes, both candidate legs, and the
@@ -514,7 +487,6 @@ def ppjoin_merge_batch(
             ),
             _RANKED_SLOT,
         )
-        mark("ranked-pin")
         new_post = ranked.select("doc_id", "n_sh", "sh")
         new_prefix = ranked.filter(
             F.col("_rn") <= ppjoin_probe_k()
@@ -562,7 +534,6 @@ def ppjoin_merge_batch(
             # buckets (a bounded IN-list), and read ONLY those doc
             # buckets for verification (docstring step 4).
             cand = pinning.pin(cand, _CAND_SLOT)
-            mark("cand-pin")
             doc_buckets = [
                 r[0]
                 for r in cand.select(
@@ -627,7 +598,6 @@ def ppjoin_merge_batch(
         # its own partition (geometric full view) — these full reads
         # are unpruned by design and amortized by the doubling rule.
         _write_state(pairs, state_dir, _PAIRS, batch_id)
-        mark("pairs-write")
         if compacting_facts:
             full_post = _read_state(
                 spark, state_dir, _POSTINGS, batch_id, meta=meta
@@ -639,31 +609,23 @@ def ppjoin_merge_batch(
                 spark, state_dir, _DOCS, batch_id, meta=meta
             ).unionByName(new.select("doc_id", "sh_arr", "n_sh"))
             _write_state(full_post, state_dir, _POSTINGS, batch_id)
-            mark("postings-write(full)")
             _write_state(full_prefix, state_dir, _PREFIXES, batch_id)
-            mark("prefixes-write(full)")
             _write_state(full_docs, state_dir, _DOCS, batch_id)
-            mark("docs-write(full)")
         else:
             _write_state(new_post, state_dir, _POSTINGS, batch_id)
-            mark("postings-write")
             _write_state(new_prefix, state_dir, _PREFIXES, batch_id)
-            mark("prefixes-write")
             _write_state(
                 new.select("doc_id", "sh_arr", "n_sh"),
                 state_dir,
                 _DOCS,
                 batch_id,
             )
-            mark("docs-write")
         _write_state(cur_df, state_dir, _DFREQ, batch_id)
-        mark("dfreq-write")
         # postings-row ledger for the geometric trigger — one tiny job
         # off the batch checkpoint.
         batch_rows = new.agg(
             F.coalesce(F.sum("n_sh"), F.lit(0)).alias("r")
         ).collect()[0]["r"]
-        mark("ledger-collect")
         if meta["max"] < batch_id:
             # the replay-after-commit guard (a crash between manifest
             # replace and Spark's own checkpoint commit replays this
